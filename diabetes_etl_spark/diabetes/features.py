@@ -167,3 +167,58 @@ def engineer_features(df: DataFrame) -> DataFrame:
             "data_quality_score": data_quality_score(),
         }
     )
+
+
+CORR_PAIRS = (
+    ("Glucose", "BMI", "glucose_bmi_corr"),
+    ("Age", "Pregnancies", "age_pregnancies_corr"),
+    ("BloodPressure", "BMI", "bp_bmi_corr"),
+    ("Insulin", "Glucose", "insulin_glucose_corr"),
+)
+
+
+def feature_correlation(silver: DataFrame) -> DataFrame:
+    """Pearson r of the ``CORR_PAIRS`` measures per (age group, BMI
+    category), rounded to 6 digits (reference: pipeline:589-622).
+
+    r comes from plain double sums, n*Sxy - Sx*Sy over
+    sqrt(n*Sxx - Sx^2) * sqrt(n*Syy - Sy^2), which replaces Spark's
+    order-sensitive Covariance merge (exact on the registry fixtures,
+    whose measures are dyadic — plans/diabetesplans.py).  A cell where
+    either column has zero variance (one row, or a constant column)
+    gets NULL r instead of an ANSI divide-by-zero."""
+    cols = sorted({c for x, y, _ in CORR_PAIRS for c in (x, y)})
+    aggs = [
+        F.count(F.lit(1)).alias("sample_size"),
+        F.round(F.avg("Outcome"), 3).alias("diabetes_prevalence"),
+    ]
+    for c in cols:
+        d = F.col(c).cast("double")
+        aggs.append(F.sum(d).alias(f"_s_{c}"))
+        aggs.append(F.sum(d * d).alias(f"_ss_{c}"))
+    for x, y, name in CORR_PAIRS:
+        aggs.append(
+            F.sum(F.col(x).cast("double") * F.col(y).cast("double")).alias(
+                f"_sp_{name}"
+            )
+        )
+    g = silver.groupBy("age_group", "bmi_category").agg(*aggs)
+    n = F.col("sample_size").cast("double")
+    for x, y, name in CORR_PAIRS:
+        num = n * F.col(f"_sp_{name}") - F.col(f"_s_{x}") * F.col(f"_s_{y}")
+        vx = n * F.col(f"_ss_{x}") - F.col(f"_s_{x}") * F.col(f"_s_{x}")
+        vy = n * F.col(f"_ss_{y}") - F.col(f"_s_{y}") * F.col(f"_s_{y}")
+        g = g.withColumn(
+            name,
+            F.when((vx > 0) & (vy > 0), F.round(num / (F.sqrt(vx) * F.sqrt(vy)), 6)),
+        )
+    return g.withColumn(
+        "correlation_strength",
+        F.when(F.abs(F.col("glucose_bmi_corr")) > 0.7, "Strong")
+        .when(F.abs(F.col("glucose_bmi_corr")) > 0.4, "Moderate")
+        .otherwise("Weak"),
+    ).drop(
+        *[f"_s_{c}" for c in cols],
+        *[f"_ss_{c}" for c in cols],
+        *[f"_sp_{name}" for _, _, name in CORR_PAIRS],
+    )

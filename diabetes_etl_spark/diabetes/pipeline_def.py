@@ -385,24 +385,8 @@ def build_diabetes_pipeline(
     )
     def diabetes_feature_correlation(c) -> DataFrame:
         # reference: pipeline:589-622
-        s = c.read("diabetes_silver")
-        return (
-            s.groupBy("age_group", "bmi_category")
-            .agg(
-                F.count("*").alias("sample_size"),
-                F.corr("Glucose", "BMI").alias("glucose_bmi_corr"),
-                F.corr("Age", "Pregnancies").alias("age_pregnancies_corr"),
-                F.corr("BloodPressure", "BMI").alias("bp_bmi_corr"),
-                F.corr("Insulin", "Glucose").alias("insulin_glucose_corr"),
-                F.round(F.avg("Outcome"), 3).alias("diabetes_prevalence"),
-            )
-            .withColumn(
-                "correlation_strength",
-                F.when(F.abs(F.col("glucose_bmi_corr")) > 0.7, "Strong")
-                .when(F.abs(F.col("glucose_bmi_corr")) > 0.4, "Moderate")
-                .otherwise("Weak"),
-            )
-            .withColumn("created_at", ctx.now())
+        return FE.feature_correlation(c.read("diabetes_silver")).withColumn(
+            "created_at", ctx.now()
         )
 
     @p.table(

@@ -35,23 +35,20 @@ Scale notes (100 TB lens):
   KB) against the long point table — no shuffle of the points until
   the (id, cid) partial aggregate, which map-side-combines n·d·k
   down to n·k before the exchange;
-- centroid state is k·d rows (tiny) and is committed per round to
-  ``work_dir`` parquet with ``_SUCCESS`` markers — the
-  executor-loss-safe pattern proven in operators/components.py:
-  lineage truncates every round and a restarted driver resumes from
-  the last fully-committed round;
+- centroid state is k·d rows (tiny) and is committed per round
+  (operators/iterstate.py): lineage truncates every round and a
+  restarted driver resumes from the last committed round;
 - k and d are bounded (centroids broadcast); n is unbounded — the
   only O(n) state lives in the filesystem, never in driver memory.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.functions.numeric import dec_cast
+from diabetes_etl_spark.operators.iterstate import RoundState
 from diabetes_etl_spark.operators.util import scratch_dir
 
 # per-dimension squared-difference terms and point coordinates fold at
@@ -62,57 +59,105 @@ _DEC_TERM = "decimal(25,15)"
 _MEAN_SCALE = 12
 
 
-def _round_path(work_dir: str, k: int) -> str:
-    return os.path.join(work_dir, f"centroids_{k:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
-    """(id, cluster, d2): nearest centroid per point under exact
-    decimal-folded squared L2, ties on the smaller cluster id.
+def lloyd_assign(
+    pts: DataFrame, cent: DataFrame, groups: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id, *groups, cid, d2): nearest centroid per point (and per
+    ``groups`` key — PQ's subspace) under exact decimal-folded squared
+    L2, ties on the smaller centroid id.
 
     The centroid side is k·d rows — broadcast, so the n·d long table
     never shuffles for the join; the (id, cid) aggregate map-side
     combines before its exchange."""
     diff = F.col("x") - F.col("c")
     d2 = (
-        pts.join(F.broadcast(cent), "pos")
-        .groupBy("id", "cid")
+        pts.join(F.broadcast(cent), [*groups, "pos"])
+        .groupBy("id", *groups, "cid")
         .agg(F.sum((diff * diff).cast(_DEC_TERM)).alias("d2"))
     )
-    return d2.groupBy("id").agg(F.min(F.struct("d2", "cid")).alias("m")).select(
-        "id", F.col("m.cid").alias("cluster"), F.col("m.d2").alias("d2")
+    return (
+        d2.groupBy("id", *groups)
+        .agg(F.min(F.struct("d2", "cid")).alias("m"))
+        .select("id", *groups, F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
     )
 
 
-def _update(pts: DataFrame, assign: DataFrame, prev: DataFrame) -> DataFrame:
-    """New centroid table from an assignment: per-(cluster, pos) exact
-    decimal mean, pinned to DECIMAL(18,12) doubles; clusters that lost
-    every point carry their previous centroid (the left-join spine is
-    the previous round's k·d rows, so k never shrinks)."""
+def lloyd_update(
+    pts: DataFrame,
+    assign: DataFrame,
+    prev: DataFrame,
+    groups: tuple[str, ...] = (),
+) -> DataFrame:
+    """New centroid table from an assignment: per-(*groups, cid, pos)
+    exact decimal mean, pinned to DECIMAL(18,12) doubles; centroids
+    that lost every point carry their previous value (the left-join
+    spine is the previous round's rows, so k never shrinks)."""
     sums = (
-        pts.join(assign.select("id", "cluster"), "id")
-        .groupBy("cluster", "pos")
+        pts.join(assign.select("id", *groups, "cid"), ["id", *groups])
+        .groupBy(*groups, "cid", "pos")
         .agg(
             F.sum(F.col("x").cast(_DEC_TERM)).alias("s"),
             F.count("*").alias("n"),
         )
     )
     newc = sums.select(
-        F.col("cluster").alias("cid"),
+        *groups,
+        "cid",
         "pos",
         dec_cast(F.col("s").cast("double") / F.col("n"), _MEAN_SCALE).alias(
             "c_new"
         ),
     )
     return (
-        prev.select("cid", "pos", F.col("c").alias("c_old"))
-        .join(newc, ["cid", "pos"], "left")
-        .select("cid", "pos", F.coalesce("c_new", "c_old").alias("c"))
+        prev.select(*groups, "cid", "pos", F.col("c").alias("c_old"))
+        .join(newc, [*groups, "cid", "pos"], "left")
+        .select(*groups, "cid", "pos", F.coalesce("c_new", "c_old").alias("c"))
     )
+
+
+def lloyd(
+    rs: RoundState,
+    seed_src: DataFrame,
+    id_col: str,
+    long_pts: DataFrame,
+    points: str,
+    k: int,
+    iterations: int,
+    groups: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """(points, centroids) after ``iterations`` Lloyd rounds — the loop
+    shared by :func:`kmeans_assign` and PQ training.
+
+    The long point form is snapshotted once as ``points`` (committed
+    parquet, or a localCheckpoint in volatile mode), so every round
+    reads the same point set and the upstream embedding subtree runs
+    once.  Round 0 seeds the centroids from the k smallest ids of
+    ``seed_src`` (k-row window after a LIMIT — bounded, deterministic,
+    no RNG)."""
+    pts = rs.snapshot(long_pts, points)
+    seeds = (
+        seed_src.select(F.col(id_col).alias("sid"))
+        .orderBy("sid")
+        .limit(k)
+        .withColumn(
+            "cid", F.row_number().over(Window.orderBy("sid")) - 1
+        )
+    )
+    c0 = pts.join(F.broadcast(seeds), pts["id"] == seeds["sid"]).select(
+        *groups, "cid", "pos", F.col("x").alias("c")
+    )
+    cent, _, _ = rs.run(
+        lambda: c0,
+        lambda c, _k: lloyd_update(pts, lloyd_assign(pts, c, groups), c, groups),
+        iterations,
+    )
+    return pts, cent
+
+
+def _kmeans_state(spark, work_dir: str | None) -> RoundState:
+    # k·d centroid rows: one file per committed round, driver rows
+    # (one collect job a round) when volatile
+    return RoundState(spark, work_dir, "centroids_", partitions=1, volatile="rows")
 
 
 def kmeans_assign(
@@ -129,26 +174,13 @@ def kmeans_assign(
     centroid — exact decimal internally, reported as a DOUBLE rounded
     to 9 digits (see the output comment in the code).
 
-    ``work_dir`` is the reliable-materialization directory (module
-    docstring): pass a durable path to make the loop resumable across
-    driver restarts; a given ``work_dir`` belongs to one invocation's
-    (input, k, iterations) and must not be shared across different
-    ones.  When omitted (the default), centroid state lives as k·d
-    driver rows instead — the PCA/GBDT bounded-driver-state pattern —
-    and each round is ONE collect job with no parquet round-trip: the
-    volatile mode costs one job per round, the durable mode one
-    write + read per round (identical arithmetic, identical output;
-    pinned by tests/test_clustering.py work_dir-parity tests).  The
-    long point form is snapshotted once per invocation via
-    localCheckpoint in volatile mode, so every round reads the same
-    point set even under a nondeterministic upstream (the same
-    single-draw guarantee the durable parquet materialization gives).
+    ``work_dir`` makes the loop resumable across driver restarts
+    (operators/iterstate.py).  When omitted (the default), centroid
+    state lives as k·d driver rows instead — the PCA/GBDT
+    bounded-driver-state pattern — and each round is ONE collect job
+    with no parquet round-trip (identical arithmetic, identical output;
+    pinned by the work_dir-parity tests).
     """
-    spark = df.sparkSession
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
-
     long_pts = (
         df.select(
             F.col(id_col).alias("id"),
@@ -156,74 +188,11 @@ def kmeans_assign(
         )
         .select("id", "pos", F.col("xf").cast("double").alias("x"))
     )
-    if durable:
-        # long-format points, materialized exactly once: every round
-        # reads this parquet, so the (possibly expensive) upstream
-        # embedding subtree executes exactly once across restarts
-        pts_path = os.path.join(work_dir, "points")
-        if not _is_committed(pts_path):
-            long_pts.write.mode("overwrite").parquet(pts_path)
-        pts = spark.read.parquet(pts_path)
-    else:
-        # volatile mode (round-14, verdict-r13 #3): the loop references
-        # ``pts`` in BOTH _assign and _update every round plus the
-        # final assignment — 2*iterations+1 executions of the upstream
-        # subtree if left lazy.  localCheckpoint materializes the long
-        # form ONCE into executor storage (memory, spilling to local
-        # disk) on its first use (eager=False: building the plan stays
-        # job-free), so every round scans the snapshot instead of
-        # re-running the corpus scan + posexplode.  Per-invocation
-        # state only — nothing persists across runs.  This also pins
-        # the round-13 ADVICE determinism caveat: a nondeterministic
-        # upstream is now snapshotted once, so all rounds see the same
-        # point set (the durable mode's parquet materialization gave
-        # the same guarantee).
-        pts = long_pts.localCheckpoint(eager=False)
-
-    # round 0: the k smallest ids seed the centroids (k-row window
-    # after a LIMIT — bounded, deterministic)
-    seeds = (
-        df.select(F.col(id_col).alias("sid"))
-        .orderBy("sid")
-        .limit(k)
-        .withColumn(
-            "cid", F.row_number().over(Window.orderBy("sid")) - 1
-        )
+    pts, cent = lloyd(
+        _kmeans_state(df.sparkSession, work_dir),
+        df, id_col, long_pts, "points", k, iterations,
     )
-    c0 = pts.join(F.broadcast(seeds), pts["id"] == seeds["sid"]).select(
-        "cid", "pos", F.col("x").alias("c")
-    )
-
-    if durable:
-        last = None
-        for r in range(iterations, -1, -1):
-            if _is_committed(_round_path(work_dir, r)):
-                last = r
-                break
-        if last is None:
-            c0.coalesce(1).write.mode("overwrite").parquet(
-                _round_path(work_dir, 0)
-            )
-            last = 0
-        cent = spark.read.parquet(_round_path(work_dir, last))
-        for r in range(last + 1, iterations + 1):
-            (
-                _update(pts, _assign(pts, cent), cent)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, r))
-            )
-            cent = spark.read.parquet(_round_path(work_dir, r))
-    else:
-        # k·d rows of driver state per round; collect -> local relation
-        # preserves the exact doubles (no serialization rounding), so
-        # the arithmetic is bit-identical to the parquet path
-        cent = spark.createDataFrame(c0.collect(), c0.schema)
-        for _ in range(iterations):
-            upd = _update(pts, _assign(pts, cent), cent)
-            cent = spark.createDataFrame(upd.collect(), upd.schema)
-
-    final = _assign(pts, cent)
+    final = lloyd_assign(pts, cent)
     # d2 reports at 9 digits (the repo's float-output convention, cf.
     # cosine_sim): the full scale-15 decimal is exact per engine but a
     # double->decimal CAST tie (HALF_UP vs half-even) in one of the
@@ -231,7 +200,9 @@ def kmeans_assign(
     # cross-engine; 9 digits is far above that noise and far below any
     # real between-cluster distance gap.
     return final.select(
-        "id", "cluster", F.round(F.col("d2").cast("double"), 9).alias("d2")
+        "id",
+        F.col("cid").alias("cluster"),
+        F.round(F.col("d2").cast("double"), 9).alias("d2"),
     )
 
 
@@ -458,13 +429,12 @@ def kmeans_silhouette(
     spark = df.sparkSession
     if work_dir is None:
         work_dir = scratch_dir(spark, "spark_sil_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
     assign = kmeans_assign(
         df, id_col, vec_col, k=k, iterations=iterations, work_dir=work_dir
     ).select("id", "cluster")
-    pts = spark.read.parquet(os.path.join(work_dir, "points"))
-    cent = spark.read.parquet(_round_path(work_dir, iterations))
+    rs = _kmeans_state(spark, work_dir)
+    pts = rs.read("points")
+    cent = rs.read_round(iterations)
     diff = F.col("x") - F.col("c")
     alld = (
         pts.join(F.broadcast(cent), "pos")

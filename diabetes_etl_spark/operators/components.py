@@ -17,55 +17,26 @@ graphs the published fix is alternating large-star/small-star
 SoCC'14), which converges in O(log^2 n); the hook here is the same
 edge relation, so swapping the inner step is local to this file.
 
-Fault tolerance (the 100 TB concern): each round's labels are
-PERSISTED to ``work_dir`` as parquet and read back, so
-
-- lineage is truncated every round (without that, round k replays
-  rounds 1..k-1 and the plan grows quadratically), and
-- the materialization is RELIABLE: it lives in the filesystem, not in
-  executor block-manager memory.  ``localCheckpoint`` (the previous
-  implementation) stores blocks on executors — lose one executor at
-  round k and the whole job dies unrecoverably, which on a
-  1000-executor preemptible fleet is the common case, not the edge
-  case.  On a cluster, point ``work_dir`` at the warehouse/HDFS path;
-  a restarted driver resumes from the last fully-written round
-  (parquet ``_SUCCESS`` markers are the commit protocol — a partially
-  written round is simply overwritten).
-
-The labels are (id, component) longs — the text/payload never enters
-the loop, so a round's parquet is tiny relative to the input corpus.
-The convergence probe compares two ALREADY-MATERIALIZED rounds (a
-join of two label parquets on id), so each round costs exactly one
-materialization of new state.
+Round state (per-round commit, resume, snapshots, the volatile twin)
+follows the protocol in operators/iterstate.py.  The labels are
+(id, component) longs — the text/payload never enters the loop, so a
+round's state is tiny relative to the input corpus, and each round
+carries its own ``changed`` flag so the convergence probe is a
+filter+count over the round just written, not a second join.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.operators.iterstate import state_write_partitions
-from diabetes_etl_spark.operators.util import scratch_dir
+from diabetes_etl_spark.operators.iterstate import (
+    CONVERGED,
+    RoundState,
+    state_write_partitions,
+)
 
-_CONVERGED_MARKER = "CONVERGED"
 _STAR_SWITCH_MARKER = "STAR_SWITCH"
-
-
-def _round_path(work_dir: str, k: int) -> str:
-    return os.path.join(work_dir, f"round_{k:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _last_committed_round(work_dir: str, max_iter: int) -> int | None:
-    for k in range(max_iter, -1, -1):
-        if _is_committed(_round_path(work_dir, k)):
-            return k
-    return None
 
 
 def connected_components(
@@ -88,25 +59,19 @@ def connected_components(
     the RuntimeError backstop remains for the pathological case where
     neither loop reaches a fixpoint in bounded rounds.
 
-    ``work_dir`` is the reliable-materialization directory (see module
-    docstring).  Pass a durable path to make the loop resumable across
-    driver restarts.  When omitted (round-14, verdict-r13 #8 — the
-    kmeans_assign/pq_train volatile precedent), per-round state lives
-    as ``localCheckpoint`` blocks in executor storage instead: the
-    same one-materialization-per-round lineage truncation with no
-    parquet round-trips and no temp directory, at the cost of
-    restartability — executor/driver loss restarts the invocation
-    from scratch, which is the right trade for a one-shot query (the
-    durable mode is unchanged and remains the 1000-executor
-    preemptible-fleet path).  Identical labels either way: each round
-    runs the same join/aggregate over a materialized snapshot.
+    ``work_dir`` makes the loop resumable across driver restarts
+    (operators/iterstate.py).  When omitted, per-round state lives as
+    ``localCheckpoint`` blocks in executor storage instead: the same
+    one-materialization-per-round lineage truncation with no parquet
+    round-trips, at the cost of restartability — the right trade for a
+    one-shot query.  Identical labels either way.
 
     High-diameter escape hatch: min-label propagation needs
     O(diameter) rounds, so when the per-round label-change count stops
     shrinking geometrically (the signature of a long-chain graph — a
     near-dup cluster is a near-clique and converges in 2-4 rounds),
     the loop AUTO-SWITCHES to :func:`connected_components_star`
-    (O(log^2 n) rounds) over the already-materialized edge parquet.
+    (O(log^2 n) rounds) over the already-materialized edge set.
     The switch is recorded in ``work_dir`` so a restarted driver
     resumes directly on the star path.  Result contract is unchanged
     (the star labels are reconciled with self-loop-only nodes, which
@@ -115,207 +80,64 @@ def connected_components(
     want the O(diameter) bound to FAIL loudly instead).
     """
     spark = edges.sparkSession
-    nparts = state_write_partitions(spark, state_partitions)
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
+    rs = RoundState(
+        spark,
+        work_dir,
+        "round_",
+        partitions=state_write_partitions(spark, state_partitions),
+        volatile="checkpoint",
+    )
 
-    if not durable:
-        return _connected_components_volatile(
-            edges, src, dst, max_iter, auto_star, assume_symmetric
-        )
-
-    conv_marker = os.path.join(work_dir, _CONVERGED_MARKER)
-    star_marker = os.path.join(work_dir, _STAR_SWITCH_MARKER)
-    last = _last_committed_round(work_dir, max_iter)
-    if os.path.exists(conv_marker) and last is not None:
-        return spark.read.parquet(_round_path(work_dir, last)).select(
-            "id", "component"
-        )
-
-    def _star_fallback(sym_df: DataFrame) -> DataFrame:
-        labels = connected_components_star(
-            sym_df,
-            "a",
-            "b",
-            max_iter=max(2 * max_iter, 40),
-            work_dir=os.path.join(work_dir, "star"),
-        )
-        # parity with the label-propagation contract: a node appearing
-        # ONLY in self-loop edges is its own component (the canonical
-        # star relation filters self-pairs, so reconcile here)
-        missing = (
-            sym_df.select(F.col("a").alias("id"))
-            .distinct()
-            .join(labels, "id", "left_anti")
-            .withColumn("component", F.col("id"))
-        )
-        return labels.unionByName(missing)
-
-    # materialize the RAW edge list first, then symmetrize FROM THE
-    # PARQUET: the upstream pair pipeline (shingling, LSH, verification
+    # snapshot the RAW edge list first, then symmetrize FROM THE
+    # SNAPSHOT: the upstream pair pipeline (shingling, LSH, verification
     # joins) executes exactly once.  Building union(edges, swap(edges))
     # directly would duplicate the whole upstream subtree — Catalyst
-    # does not share common subtrees across union branches, so the
-    # most expensive stage of the job would run twice.
-    raw_path = os.path.join(work_dir, "raw_edges")
+    # does not share common subtrees across union branches.
+    raw = rs.snapshot(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        "raw_edges",
+        eager=True,
+    )
     # ``assume_symmetric``: the caller PROMISES the input already
     # carries both directions of every edge, deduplicated (e.g. it was
     # built as union(e, swap(e)).distinct() upstream, or filtered from
     # such a set) — the symmetrize-distinct below would shuffle the
     # whole edge set once more only to reproduce its input.  A wrong
     # promise gives wrong components; callers opt in explicitly.
-    sym_path = raw_path if assume_symmetric else os.path.join(
-        work_dir, "sym_edges"
-    )
-    if not _is_committed(sym_path):
-        if not _is_committed(raw_path):
-            (
-                edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-                .write.mode("overwrite")
-                .parquet(raw_path)
-            )
-        if not assume_symmetric:
-            raw = spark.read.parquet(raw_path)
-            (
-                raw.union(
-                    raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(sym_path)
-            )
-    sym = spark.read.parquet(sym_path)
-    if os.path.exists(star_marker):
-        return _star_fallback(sym)
-
-    if last is None:
-        (
-            sym.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("component", F.col("id"))
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, 0))
-        )
-        last = 0
-    labels = spark.read.parquet(_round_path(work_dir, last))
-
-    prev_changed: int | None = None
-    strikes = 0
-    for k in range(last + 1, max_iter + 1):
-        nbr_min = sym.join(
-            labels, sym["b"] == labels["id"]
-        ).groupBy("a").agg(F.min("component").alias("nbr_min"))
-        out = _round_path(work_dir, k)
-        new_comp = F.least(
-            labels["component"],
-            F.coalesce(F.col("nbr_min"), labels["component"]),
-        )
-        # the convergence signal is computed INSIDE the round's write
-        # (the join is already running) and persisted as a column, so
-        # the probe below is a filter+count over the tiny label parquet
-        # — not a second join job per round; coalesce keeps the
-        # per-round file count flat (labels are two longs per node)
-        (
-            labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
-            .select(
-                labels["id"],
-                new_comp.alias("component"),
-                (new_comp != labels["component"]).alias("changed"),
-            )
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        new_labels = spark.read.parquet(out)
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            with open(conv_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(k))
-            return labels
-        # geometric-shrink probe (module docstring): a near-clique's
-        # change count collapses round over round; a chain's decays
-        # ~linearly (ratio -> 1).  One high ratio can be noise from a
-        # small residual right before the fixpoint (a bridged clique
-        # pair produces exactly that), so the switch needs TWO
-        # CONSECUTIVE rounds with ratio > 0.7 — the signature of
-        # O(diameter) rounds ahead — and then hands the same
-        # materialized edge set to the O(log^2 n) star algorithm
-        # (recording the switch so a restarted driver resumes straight
-        # onto the star path).
-        if prev_changed is not None and changed > 0.7 * prev_changed:
-            strikes += 1
-        else:
-            strikes = 0
-        if auto_star and k >= 3 and strikes >= 2:
-            with open(star_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(k))
-            return _star_fallback(sym)
-        prev_changed = changed
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "the edge set has a longer path than any near-dup cluster "
-        "should; raise max_iter only if that is intended (or use "
-        "connected_components_star, which converges in O(log^2 n) "
-        "rounds on high-diameter graphs)"
+    sym = raw if assume_symmetric else rs.snapshot(
+        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct(),
+        "sym_edges",
     )
 
-
-def _connected_components_volatile(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-    auto_star: bool,
-    assume_symmetric: bool,
-) -> DataFrame:
-    """The no-``work_dir`` body of :func:`connected_components`:
-    identical round structure (one symmetrized-edge snapshot, one
-    label snapshot per round, the same convergence and star-switch
-    probes), with every materialization a ``localCheckpoint`` instead
-    of a committed parquet.  Round state is two longs per node, so
-    executor block storage is the cheaper medium; lineage still
-    truncates every round (without that, round k replays rounds
-    1..k-1).  Raw edges checkpoint EAGERLY before symmetrization so
-    the upstream pair pipeline (shingling, LSH, verification joins)
-    executes exactly once — the union's two branches would otherwise
-    race to compute the same subtree."""
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    if assume_symmetric:
-        sym = raw
-    else:
-        sym = (
-            raw.union(
-                raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
-    def _star_fallback(sym_df: DataFrame) -> DataFrame:
+    def _star_fallback() -> DataFrame:
         labels = connected_components_star(
-            sym_df, "a", "b", max_iter=max(2 * max_iter, 40)
+            sym, "a", "b", max_iter=max(2 * max_iter, 40),
+            work_dir=rs.path("star"),
         )
+        # parity with the label-propagation contract: a node appearing
+        # ONLY in self-loop edges is its own component (the canonical
+        # star relation filters self-pairs, so reconcile here)
         missing = (
-            sym_df.select(F.col("a").alias("id"))
+            sym.select(F.col("a").alias("id"))
             .distinct()
             .join(labels, "id", "left_anti")
             .withColumn("component", F.col("id"))
         )
         return labels.unionByName(missing)
 
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    prev_changed: int | None = None
-    strikes = 0
-    for k in range(1, max_iter + 1):
+    if rs.marker(_STAR_SWITCH_MARKER) is not None:
+        return _star_fallback()
+
+    def _init() -> DataFrame:
+        return (
+            sym.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+        )
+
+    def _step(cur: DataFrame, _k: int) -> DataFrame:
+        labels = cur.select("id", "component")
         nbr_min = sym.join(
             labels, sym["b"] == labels["id"]
         ).groupBy("a").agg(F.min("component").alias("nbr_min"))
@@ -323,33 +145,53 @@ def _connected_components_volatile(
             labels["component"],
             F.coalesce(F.col("nbr_min"), labels["component"]),
         )
-        new_labels = (
-            labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
-            .select(
-                labels["id"],
-                new_comp.alias("component"),
-                (new_comp != labels["component"]).alias("changed"),
-            )
-            .localCheckpoint(eager=False)
+        # the convergence signal is computed INSIDE the round's
+        # materialization (the join is already running) and kept as a
+        # column, so the probe is a filter+count over the round state
+        return labels.join(nbr_min, labels["id"] == nbr_min["a"], "left").select(
+            labels["id"],
+            new_comp.alias("component"),
+            (new_comp != labels["component"]).alias("changed"),
         )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("id", "component")
+
+    prev_changed: int | None = None
+    strikes = 0
+
+    def _stop(cur: DataFrame, k: int) -> str | None:
+        nonlocal prev_changed, strikes
+        if k == 0:
+            return None
+        changed = cur.filter(F.col("changed")).count()
         if changed == 0:
-            return labels
+            return CONVERGED
+        # geometric-shrink probe (module docstring): a near-clique's
+        # change count collapses round over round; a chain's decays
+        # ~linearly (ratio -> 1).  One high ratio can be noise from a
+        # small residual right before the fixpoint (a bridged clique
+        # pair produces exactly that), so the switch needs TWO
+        # CONSECUTIVE rounds with ratio > 0.7 — the signature of
+        # O(diameter) rounds ahead.
         if prev_changed is not None and changed > 0.7 * prev_changed:
             strikes += 1
         else:
             strikes = 0
         if auto_star and k >= 3 and strikes >= 2:
-            return _star_fallback(sym)
+            return _STAR_SWITCH_MARKER
         prev_changed = changed
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "the edge set has a longer path than any near-dup cluster "
-        "should; raise max_iter only if that is intended (or use "
-        "connected_components_star, which converges in O(log^2 n) "
-        "rounds on high-diameter graphs)"
-    )
+        return None
+
+    labels, _, verdict = rs.run(_init, _step, max_iter, _stop)
+    if verdict == _STAR_SWITCH_MARKER:
+        return _star_fallback()
+    if verdict is None:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds — "
+            "the edge set has a longer path than any near-dup cluster "
+            "should; raise max_iter only if that is intended (or use "
+            "connected_components_star, which converges in O(log^2 n) "
+            "rounds on high-diameter graphs)"
+        )
+    return labels.select("id", "component")
 
 
 def connected_components_star(
@@ -380,10 +222,9 @@ def connected_components_star(
     The set converges to a star forest — every pair is (component
     minimum, member) — detected STRUCTURALLY (each member appears in
     exactly one pair and never as a root), which is stateless and so
-    survives driver-restart resume.  Per-round state is persisted to
-    ``work_dir`` exactly like the label-propagation variant: reliable
-    parquet materialization, resume from the last committed round, no
-    executor-memory checkpoints.
+    survives driver-restart resume.  Per-round state is committed
+    parquet (operators/iterstate.py), under a scratch directory when
+    ``work_dir`` is omitted.
 
     Near-dup clusters are near-cliques, so the default pair-dedup path
     keeps min-label propagation (fewer, cheaper rounds there); this
@@ -391,88 +232,65 @@ def connected_components_star(
     graphs (chains of borderline-similar documents, entity-resolution
     edges, clickstream link graphs).
     """
-    spark = edges.sparkSession
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_ccstar_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
+    rs = RoundState(edges.sparkSession, work_dir, "round_")
 
-    conv_marker = os.path.join(work_dir, _CONVERGED_MARKER)
-
-    def _is_star_forest(pairs: DataFrame) -> bool:
+    def _is_star_forest(pairs: DataFrame, _k: int) -> str | None:
         dup_member = (
             pairs.groupBy("b").count().filter(F.col("count") > 1)
         )
         member_as_root = pairs.select("a").intersect(pairs.select("b"))
-        return (
+        if (
             dup_member.limit(1).count() == 0
             and member_as_root.limit(1).count() == 0
+        ):
+            return CONVERGED
+        return None
+
+    def _init() -> DataFrame:
+        return (
+            edges.select(
+                F.least(F.col(src), F.col(dst)).alias("a"),
+                F.greatest(F.col(src), F.col(dst)).alias("b"),
+            )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
 
-    last = _last_committed_round(work_dir, max_iter)
-    if not (os.path.exists(conv_marker) and last is not None):
-        if last is None:
-            (
-                edges.select(
-                    F.least(F.col(src), F.col(dst)).alias("a"),
-                    F.greatest(F.col(src), F.col(dst)).alias("b"),
-                )
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, 0))
+    def _step(cur: DataFrame, k: int) -> DataFrame:
+        sym = cur.union(
+            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        m = (
+            sym.groupBy("a")
+            .agg(F.min("b").alias("minb"))
+            .select("a", F.least(F.col("a"), F.col("minb")).alias("m"))
+        )
+        if k % 2 == 1:  # large-star
+            # every canonical pair (a, b) has b > a, so the whole
+            # set rewrites to (m(a), b); m(a) <= a < b keeps the
+            # output canonical with no self-pairs
+            nxt = cur.join(m, "a").select(F.col("m").alias("a"), F.col("b"))
+        else:  # small-star
+            # per node u: (m(u), v) for smaller neighbors v < u,
+            # plus (m(u), u); m(u) <= v for neighbors v < u, and
+            # self-pairs (v = m(u) or u = m(u)) are filtered
+            smaller = sym.filter(F.col("b") < F.col("a")).join(
+                m, "a"
+            ).select(F.col("m").alias("a"), F.col("b"))
+            self_attach = m.select(
+                F.col("m").alias("a"), F.col("a").alias("b")
             )
-            last = 0
-        cur = spark.read.parquet(_round_path(work_dir, last))
-        converged = _is_star_forest(cur)
-        if converged:
-            with open(conv_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(last))
-        k = last
-        while not converged:
-            k += 1
-            if k > max_iter:
-                raise RuntimeError(
-                    f"connected_components_star did not converge in "
-                    f"{max_iter} rounds"
-                )
-            sym = cur.union(
-                cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            nxt = smaller.union(self_attach).filter(
+                F.col("a") != F.col("b")
             )
-            m = (
-                sym.groupBy("a")
-                .agg(F.min("b").alias("minb"))
-                .select("a", F.least(F.col("a"), F.col("minb")).alias("m"))
-            )
-            if k % 2 == 1:  # large-star
-                # every canonical pair (a, b) has b > a, so the whole
-                # set rewrites to (m(a), b); m(a) <= a < b keeps the
-                # output canonical with no self-pairs
-                nxt = cur.join(m, "a").select(
-                    F.col("m").alias("a"), F.col("b")
-                )
-            else:  # small-star
-                # per node u: (m(u), v) for smaller neighbors v < u,
-                # plus (m(u), u); m(u) <= v for neighbors v < u, and
-                # self-pairs (v = m(u) or u = m(u)) are filtered
-                smaller = sym.filter(F.col("b") < F.col("a")).join(
-                    m, "a"
-                ).select(F.col("m").alias("a"), F.col("b"))
-                self_attach = m.select(
-                    F.col("m").alias("a"), F.col("a").alias("b")
-                )
-                nxt = smaller.union(self_attach).filter(
-                    F.col("a") != F.col("b")
-                )
-            out = _round_path(work_dir, k)
-            nxt.distinct().write.mode("overwrite").parquet(out)
-            cur = spark.read.parquet(out)
-            converged = _is_star_forest(cur)
-            if converged:
-                with open(conv_marker, "w", encoding="utf-8") as fh:
-                    fh.write(str(k))
-    last = _last_committed_round(work_dir, max_iter)
-    cur = spark.read.parquet(_round_path(work_dir, last))
+        return nxt.distinct()
+
+    cur, _, verdict = rs.run(_init, _step, max_iter, _is_star_forest)
+    if verdict is None:
+        raise RuntimeError(
+            f"connected_components_star did not converge in "
+            f"{max_iter} rounds"
+        )
     # star forest -> labels: members point at their component minimum;
     # roots label themselves
     members = cur.select(

@@ -27,7 +27,9 @@ oracle can unroll every round in SQL:
 
 Scale notes (100 TB lens):
 - training explodes vectors once to (id, sub, pos, x) long format and
-  materializes it (one upstream execution); every Lloyd round is a
+  snapshots it (one upstream execution); every Lloyd round — the
+  k-means loop of operators/clustering.py with ``sub`` as an extra
+  group key, committed per operators/iterstate.py — is a
   BROADCAST join of the m*k*sub_dim centroid table against that long
   table — points never shuffle for the join, and the (id, sub, code)
   partial aggregate map-side-combines n*d*k terms down to n*m*k
@@ -49,71 +51,17 @@ Scale notes (100 TB lens):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.functions.numeric import dec_cast
+from diabetes_etl_spark.operators.clustering import (
+    _DEC_TERM,
+    lloyd,
+    lloyd_assign,
+)
+from diabetes_etl_spark.operators.iterstate import RoundState
 
-_DEC_TERM = "decimal(25,15)"
-_MEAN_SCALE = 12
-
-
-def _round_path(work_dir: str, r: int) -> str:
-    return os.path.join(work_dir, f"codebook_{r:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
-    """(id, sub, code, d2): nearest centroid per (vector, subspace)
-    under exact decimal-folded squared L2, ties on the smaller code.
-
-    The centroid side is m*k*sub_dim rows — broadcast; the long point
-    table never shuffles for the join."""
-    diff = F.col("x") - F.col("c")
-    d2 = (
-        pts.join(F.broadcast(cent), ["sub", "pos"])
-        .groupBy("id", "sub", "cid")
-        .agg(F.sum((diff * diff).cast(_DEC_TERM)).alias("d2"))
-    )
-    return (
-        d2.groupBy("id", "sub")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select(
-            "id", "sub", F.col("m.cid").alias("code"), F.col("m.d2").alias("d2")
-        )
-    )
-
-
-def _update(pts: DataFrame, assign: DataFrame, prev: DataFrame) -> DataFrame:
-    """New codebook from an assignment: per-(sub, code, pos) exact
-    decimal mean pinned to DECIMAL(18,12) doubles; codes that lost
-    every vector in a subspace carry their previous centroid."""
-    sums = (
-        pts.join(assign.select("id", "sub", "code"), ["id", "sub"])
-        .groupBy("sub", "code", "pos")
-        .agg(
-            F.sum(F.col("x").cast(_DEC_TERM)).alias("s"),
-            F.count("*").alias("n"),
-        )
-    )
-    newc = sums.select(
-        "sub",
-        F.col("code").alias("cid"),
-        "pos",
-        dec_cast(F.col("s").cast("double") / F.col("n"), _MEAN_SCALE).alias(
-            "c_new"
-        ),
-    )
-    return (
-        prev.select("sub", "cid", "pos", F.col("c").alias("c_old"))
-        .join(newc, ["sub", "cid", "pos"], "left")
-        .select("sub", "cid", "pos", F.coalesce("c_new", "c_old").alias("c"))
-    )
+_SUB = ("sub",)
 
 
 def _long_points(
@@ -154,72 +102,19 @@ def pq_train(
     (input, m, k, iterations) per directory."""
     if dim % m:
         raise ValueError(f"dim {dim} does not split into {m} subspaces")
-    sub_dim = dim // m
-    spark = df.sparkSession
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
-
     train = df
     if train_cap is not None:
         train = df.orderBy(id_col).limit(train_cap)
-
-    long_pts = _long_points(train, id_col, vec_col, sub_dim)
-    if durable:
-        pts_path = os.path.join(work_dir, "train_points")
-        if not _is_committed(pts_path):
-            long_pts.write.mode("overwrite").parquet(pts_path)
-        pts = spark.read.parquet(pts_path)
-    else:
-        # volatile mode (kmeans_assign precedent): codebook state is
-        # m·k·sub_dim driver rows collected per round — one job per
-        # Lloyd round, no parquet round-trip, bit-identical
-        # arithmetic.  The long point form is localCheckpoint'd ONCE
-        # into executor storage (round-14, verdict-r13 #3): _assign
-        # and _update both reference ``pts`` every round, so leaving
-        # it lazy re-ran the corpus scan + posexplode 2*iterations+1
-        # times.  eager=False keeps plan construction job-free; the
-        # snapshot also pins a nondeterministic upstream to one draw
-        # (the round-13 ADVICE caveat).
-        pts = long_pts.localCheckpoint(eager=False)
-
-    seeds = (
-        train.select(F.col(id_col).alias("sid"))
-        .orderBy("sid")
-        .limit(k)
-        .withColumn("cid", F.row_number().over(Window.orderBy("sid")) - 1)
+    # m·k·sub_dim codebook rows: one file per committed round, driver
+    # rows (one collect job a round) when volatile
+    rs = RoundState(
+        df.sparkSession, work_dir, "codebook_", partitions=1, volatile="rows"
     )
-    c0 = pts.join(F.broadcast(seeds), pts["id"] == seeds["sid"]).select(
-        "sub", "cid", "pos", F.col("x").alias("c")
-    )
-
-    if durable:
-        last = None
-        for r in range(iterations, -1, -1):
-            if _is_committed(_round_path(work_dir, r)):
-                last = r
-                break
-        if last is None:
-            c0.coalesce(1).write.mode("overwrite").parquet(
-                _round_path(work_dir, 0)
-            )
-            last = 0
-        cent = spark.read.parquet(_round_path(work_dir, last))
-        for r in range(last + 1, iterations + 1):
-            (
-                _update(pts, _assign(pts, cent), cent)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, r))
-            )
-            cent = spark.read.parquet(_round_path(work_dir, r))
-        return cent
-
-    cent = spark.createDataFrame(c0.collect(), c0.schema)
-    for _ in range(iterations):
-        upd = _update(pts, _assign(pts, cent), cent)
-        cent = spark.createDataFrame(upd.collect(), upd.schema)
-    return cent
+    return lloyd(
+        rs, train, id_col,
+        _long_points(train, id_col, vec_col, dim // m), "train_points",
+        k, iterations, groups=_SUB,
+    )[1]
 
 
 def pq_encode(
@@ -233,7 +128,9 @@ def pq_encode(
     """(id, sub, code): each vector's nearest code per subspace — the
     long form of the m-byte PQ code.  n*m rows, the persisted asset."""
     pts = _long_points(df, id_col, vec_col, dim // m)
-    return _assign(pts, codebook).select("id", "sub", "code")
+    return lloyd_assign(pts, codebook, _SUB).select(
+        "id", "sub", F.col("cid").alias("code")
+    )
 
 
 def pq_adc_topk(

@@ -723,57 +723,12 @@ FROM (
 ) g"""
 
 
-_CORR_PAIRS = (
-    ("Glucose", "BMI", "glucose_bmi_corr"),
-    ("Age", "Pregnancies", "age_pregnancies_corr"),
-    ("BloodPressure", "BMI", "bp_bmi_corr"),
-    ("Insulin", "Glucose", "insulin_glucose_corr"),
-)
-
-
 def gold_feature_correlation(silver: DataFrame) -> DataFrame:
-    """reference: pipeline:589-622.  Pearson r from plain double sums —
-    exact here because every measure and cross-product is a multiple of
-    2^-k (module docstring), so the sums are order-independent; the
-    formula replaces Spark's order-sensitive Covariance merge."""
-    cols = sorted({c for x, y, _ in _CORR_PAIRS for c in (x, y)})
-    aggs = [
-        F.count(F.lit(1)).alias("sample_size"),
-        F.round(F.avg("Outcome"), 3).alias("diabetes_prevalence"),
-    ]
-    for c in cols:
-        d = F.col(c).cast("double")
-        aggs.append(F.sum(d).alias(f"_s_{c}"))
-        aggs.append(F.sum(d * d).alias(f"_ss_{c}"))
-    for x, y, name in _CORR_PAIRS:
-        aggs.append(
-            F.sum(F.col(x).cast("double") * F.col(y).cast("double")).alias(
-                f"_sp_{name}"
-            )
-        )
-    g = silver.groupBy("age_group", "bmi_category").agg(*aggs)
-    n = F.col("sample_size").cast("double")
-    for x, y, name in _CORR_PAIRS:
-        num = n * F.col(f"_sp_{name}") - F.col(f"_s_{x}") * F.col(f"_s_{y}")
-        vx = n * F.col(f"_ss_{x}") - F.col(f"_s_{x}") * F.col(f"_s_{x}")
-        vy = n * F.col(f"_ss_{y}") - F.col(f"_s_{y}") * F.col(f"_s_{y}")
-        g = g.withColumn(
-            name,
-            F.when((vx > 0) & (vy > 0), F.round(num / (F.sqrt(vx) * F.sqrt(vy)), 6)),
-        )
-    return (
-        g.withColumn(
-            "correlation_strength",
-            F.when(F.abs(F.col("glucose_bmi_corr")) > 0.7, "Strong")
-            .when(F.abs(F.col("glucose_bmi_corr")) > 0.4, "Moderate")
-            .otherwise("Weak"),
-        )
-        .withColumn("created_at", F.lit(_RUN_TS))
-        .drop(
-            *[f"_s_{c}" for c in cols],
-            *[f"_ss_{c}" for c in cols],
-            *[f"_sp_{name}" for _, _, name in _CORR_PAIRS],
-        )
+    """reference: pipeline:589-622 (diabetes/features.py:
+    feature_correlation — the same function the medallion pipeline
+    runs)."""
+    return FE.feature_correlation(silver).withColumn(
+        "created_at", F.lit(_RUN_TS)
     )
 
 
@@ -792,11 +747,11 @@ _O_CORR_SUMS = ",\n    ".join(
     [
         f"SUM(CAST({c} AS DOUBLE)) AS _s_{c},\n"
         f"    SUM(CAST({c} AS DOUBLE) * CAST({c} AS DOUBLE)) AS _ss_{c}"
-        for c in sorted({c for x, y, _ in _CORR_PAIRS for c in (x, y)})
+        for c in sorted({c for x, y, _ in FE.CORR_PAIRS for c in (x, y)})
     ]
     + [
         f"SUM(CAST({x} AS DOUBLE) * CAST({y} AS DOUBLE)) AS _sp_{x}_{y}"
-        for x, y, _ in _CORR_PAIRS
+        for x, y, _ in FE.CORR_PAIRS
     ]
 )
 

@@ -26,12 +26,14 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 # Nothing is skipped from the project's own verification loop:
 #   python -m pytest tests/ -q -m "slow or not slow"
 # runs everything and is part of the round's final verification
-# (OPTIMIZATION_r14.md records the full 1440-passed run).  Note the
-# redundancy budget behind the choice: the largest slow cluster is
-# test_oracle.py's per-query Spark-vs-DuckDB checks, which the
-# external driver ALSO re-runs independently for every declared query
-# at its own scale factor (CORRECTNESS_r*.json) — deselecting them
-# from the default tier loses no unique coverage at the gate.
+# (OPTIMIZATION_r14.md records the full 1440-passed run).  The largest
+# slow cluster is test_oracle.py's per-query Spark-vs-DuckDB checks.
+# Deselecting them DOES lose default-tier coverage: the external
+# driver's gate re-runs only the first 50 declared queries, so the
+# extended-tier queries among them (cluster_kmeans_embeddings,
+# dedup_components, dedup_apply_stats, semdedup_cluster_stats, ...)
+# are oracle-checked only by the full run above or by
+# tools/audit_oracle.py.
 _SLOW_TESTS_FILE = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
 
 

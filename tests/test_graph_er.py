@@ -261,6 +261,42 @@ def test_ppr_partition_invariant_bit_identical(spark):
 # -- golden_records survivorship (operators/er.py, round-7) ------------------
 
 
+def test_ppr_work_dir_resume_bit_identical(spark, tmp_path):
+    """PPR interrupted after round 1 (iterations=1 into a durable
+    work_dir, plus a junk uncommitted round-2 directory) resumes from
+    the last committed round and lands on ranks bit-identical to an
+    uninterrupted run, without rewriting the committed rounds."""
+    import os
+
+    from diabetes_etl_spark.operators.graph import personalized_pagerank
+
+    g = [(i, (i * 7 + 1) % 20) for i in range(40)]
+    srcs = spark.createDataFrame([(0,), (3,)], "node long")
+    full = sorted(
+        (r.node, r.rank)
+        for r in personalized_pagerank(
+            _edges(spark, g), srcs, iterations=3,
+            work_dir=str(tmp_path / "full"),
+        ).collect()
+    )
+    wd = tmp_path / "resume"
+    personalized_pagerank(
+        _edges(spark, g), srcs, iterations=1, work_dir=str(wd)
+    ).collect()
+    stamp = os.path.getmtime(wd / "rank_00001" / "_SUCCESS")
+    partial = wd / "rank_00002"
+    partial.mkdir()
+    (partial / "part-junk.parquet").write_bytes(b"not parquet")
+    resumed = sorted(
+        (r.node, r.rank)
+        for r in personalized_pagerank(
+            _edges(spark, g), srcs, iterations=3, work_dir=str(wd)
+        ).collect()
+    )
+    assert resumed == full
+    assert os.path.getmtime(wd / "rank_00001" / "_SUCCESS") == stamp
+
+
 def _gr(spark):
     from pyspark.sql import functions as F
 
