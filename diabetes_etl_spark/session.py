@@ -12,6 +12,43 @@ correct on a multi-executor cluster:
   AQE coalesces from a higher initial number, so we only pin it down
   when running locally.
 - Arrow enabled for any pandas-UDF path (vectorized transfer).
+- `spark.sql.codegen.cache.maxEntries=4096` (Spark's default is 100).
+  The engine serves more distinct whole-stage-codegen classes than 100,
+  so the default cache evicted and Janino recompiled plans that had
+  already run, on every pass, and the JIT then compiled each new class
+  again. On a 4-core VM, the third pass of the benchmark's 16
+  `relational_sql` queries in one session (`tools/jvm_cpu.py`) made
+  251 Janino compilations (510 generated classes); with 4096 it makes
+  none, and the benchmark's peak RSS does not rise. One cache entry is
+  one compilation; two cold passes of each of the three benchmark
+  workloads in one session make about 630, so 4096 is more than 6x
+  that. The cache is static and per JVM; entries are evicted
+  least-recently-used.
+- HotSpot's tier-4 (C2) thresholds at 10x their JDK 17 defaults, in
+  `spark.driver.defaultJavaOptions` (`DRIVER_JIT_OPTIONS`). C1 still
+  compiles every method quickly; C2 waits until a method has run 10x
+  more often, so cold Catalyst/planner code is no longer recompiled by
+  C2, while a hot loop over millions of rows reaches C2 after a fixed,
+  small number of extra iterations. In that third pass the JIT's
+  compile time fell from 19.0 s to 9.6 s with the cache alone, to
+  5.3 s with the flags alone and to 3.7 s with both, and the process
+  CPU from 35.8 s to 19.5 s. The price is paid where a plan is new: a
+  query's first run at sf0.1 took 0.3-1.2 s longer, while its warm
+  runs kept their speed. `defaultJavaOptions` is used, not
+  `extraJavaOptions`: the launcher puts it before the caller's own
+  `extraJavaOptions`, so both apply. Only the driver JVM that
+  `get_spark` launches gets the flags; cluster executors keep stock
+  thresholds. Two alternatives were measured and rejected:
+  - C1 only (`-XX:TieredStopAtLevel=1`): pass CPU fell to 20 s, but at
+    sf0.1 hot-loop queries ran 1.6-1.8x slower in wall time
+    (`q1_pricing_summary` 2.9 -> 5.0 s, `agg_global_kpis` 2.7 -> 4.8 s,
+    `quantiles_by_flag` 3.6 -> 5.7 s; the pass 33 -> 39-40 s).
+  - `-XX:CompileThresholdScaling=10`: it delays tier 3 (C1 with
+    profiling) as well, which raised session set-up about 16% (median
+    of 4 runs, 13.9 -> 16.1 s); the tier-4-only form left it at 13.9 s.
+
+An explicit `extra_conf` entry passed to `get_spark` overrides any of
+these defaults.
 """
 
 from __future__ import annotations
@@ -19,6 +56,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+CODEGEN_CACHE_ENTRIES = 4096
+
+DRIVER_JIT_OPTIONS = " ".join((
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+))
 
 
 def default_parallelism() -> int:
@@ -48,6 +95,8 @@ def session_conf(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.defaultJavaOptions": DRIVER_JIT_OPTIONS,
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # guide §3.1/§9: let the planner pick shuffled-hash join when

@@ -4,7 +4,9 @@ round 8).
 1. ``session_conf`` must pin ``spark.sql.shuffle.partitions`` ONLY
    under a local[*] master (round-7 VERDICT #2): a ~32-partition pin
    on a 1000-executor cluster starts every shuffle tiny and AQE can
-   only coalesce down, never split up (outside skew handling).
+   only coalesce down, never split up (outside skew handling).  Those
+   tests live with the other session-factory tests in
+   ``tests/test_session.py``.
 2. ``minhash_lsh_incremental`` must bound the INDEX side of the
    candidate equi-join per (band_idx, band_hash) bucket (round-7
    ADVICE): a hot historical bucket used to emit
@@ -23,36 +25,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from diabetes_etl_spark.session import session_conf
-
-SHUF = "spark.sql.shuffle.partitions"
-
-
-# -- 1. shuffle-partitions pin is local-only --------------------------------
-
-
-def test_session_conf_pins_shuffle_partitions_locally():
-    conf = session_conf("local[32]", cpus=32)
-    assert conf[SHUF] == "32"
-    assert conf["spark.sql.adaptive.enabled"] == "true"
-
-
-def test_session_conf_leaves_cluster_shuffle_partitions_alone():
-    for master in (
-        "spark://master:7077",
-        "yarn",
-        "k8s://https://host:443",
-    ):
-        conf = session_conf(master, cpus=32)
-        assert SHUF not in conf, master
-        # AQE stays in charge of initial partitioning on the cluster
-        assert conf["spark.sql.adaptive.enabled"] == "true"
-
-
-def test_session_conf_explicit_override_always_wins():
-    assert session_conf("yarn", shuffle_partitions=400, cpus=32)[SHUF] == "400"
-    assert session_conf("local[4]", shuffle_partitions=7, cpus=4)[SHUF] == "7"
 
 
 # -- 2. incremental minhash: bounded index-side bucket fan-out ---------------
